@@ -673,14 +673,9 @@ MEMOIZED_COLD_IDS = (
 )
 
 
-def _force(df) -> int:
-    """Execute the full plan distributed; returns row count via a cheap
-    count over the cached-free plan (noop write when available)."""
-    try:
-        df.write.format("noop").mode("overwrite").save()
-        return -1
-    except Exception:
-        return df.count()
+def _force(df) -> None:
+    """Execute the full plan distributed into the noop sink."""
+    df.write.format("noop").mode("overwrite").save()
 
 
 def _sf_of(sf_dir: str) -> float:

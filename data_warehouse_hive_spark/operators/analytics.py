@@ -1768,15 +1768,22 @@ def q_stats_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
         # non-negative precondition is ENFORCED, not just documented (r14
         # ADVICE): a signed-domain caller fails loudly instead of getting
         # silently corrupted midranks.  The branch is codegen'd per
-        # distinct value (not per row) — no measurable cost.
+        # distinct value (not per row) — no measurable cost.  NULL is
+        # guarded first: `NULL >= 0` is NULL, which would otherwise land
+        # in the negative-domain branch and blame the wrong cause.
         vc = (
             df.groupBy(col)
             .agg(F.count(F.lit(1)).alias("cnt"))
             .withColumn(
                 "bk",
                 F.when(
-                    F.col(col) >= 0, F.expr(f"{col} div {width}")
-                ).otherwise(
+                    F.col(col).isNull(),
+                    F.raise_error(
+                        F.lit(f"rank2_wide requires a non-NULL domain (got NULL {col})")
+                    ).cast("long"),
+                )
+                .when(F.col(col) >= 0, F.expr(f"{col} div {width}"))
+                .otherwise(
                     F.raise_error(
                         F.lit(
                             "rank2_wide requires a non-negative domain "

@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from data_warehouse_hive_spark.tables import parquet_schema
+
 
 def read_events_stream(
     spark: SparkSession, path: str, schema=None, max_files_per_trigger: int | None = None
@@ -32,8 +34,9 @@ def read_events_stream(
     unchanged)."""
     reader = spark.readStream
     if schema is None:
-        # bounded batch read to fix the schema (streaming requires one)
-        schema = spark.read.parquet(path).schema
+        # streaming requires a fixed schema: the one tables.t holds for
+        # this file version (a bounded batch inference on first use)
+        schema = parquet_schema(spark, path)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     if os.path.isfile(path):

@@ -6,6 +6,11 @@ The driver materializes a TPC-H-ish star schema plus ``events`` /
 Every query callable receives ``(spark, sf_dir)`` and reads lazily from
 here — scans stay declarative so Catalyst applies column pruning and
 predicate pushdown into the parquet reader.
+
+Each table's schema is held per session and per file version, the way a
+catalog holds it (``parquet_schema``): the first read of a file infers
+the schema from its footer, which costs one Spark job; every later read
+passes that schema to the reader and runs no inference job.
 """
 
 from __future__ import annotations
@@ -13,6 +18,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -34,8 +40,49 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+# Inferred parquet schemas keyed by (applicationId, path, file version).
+# The version is the stat of the file (of every file under a directory),
+# so a rewritten or replaced file is a new key and never served a stale
+# schema.  The inference-relevant conf (nanosAsLong) is pinned per
+# session by get_spark / ensure_engine_conf, so the session id stands in
+# for it.
+_SCHEMA_CACHE: dict[tuple, StructType] = {}
+
+
+def _file_version(path: str) -> tuple:
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return (st.st_mtime_ns, st.st_size)
+    version = []
+    for root, _, names in os.walk(path):
+        for n in names:
+            f = os.path.join(root, n)
+            st = os.stat(f)
+            version.append((f, st.st_mtime_ns, st.st_size))
+    return tuple(sorted(version))
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema Spark infers for the parquet file at `path`, inferred
+    once per session and file version."""
+    app = spark.sparkContext.applicationId
+    key = (app, path, _file_version(path))
+    schema = _SCHEMA_CACHE.get(key)
+    if schema is None:
+        # entries of a stopped session can never hit again
+        for stale in [k for k in _SCHEMA_CACHE if k[0] != app]:
+            del _SCHEMA_CACHE[stale]
+        schema = spark.read.parquet(path).schema
+        _SCHEMA_CACHE[key] = schema
+    return schema
+
+
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table as a lazy DataFrame.
+
+    The schema comes from `parquet_schema`: held per session and file
+    version like a catalog entry, so only the first read of a file runs a
+    footer-inference job and every later read runs none.
 
     `events.ts` is nanosecond-precision in the parquet file, which Spark's
     reader rejects (PARQUET_TYPE_ILLEGAL) unless nanos are read as long
@@ -45,7 +92,8 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name not in TABLES:
         raise KeyError(f"unknown fixture table {name!r}; expected one of {TABLES}")
-    df = spark.read.parquet(table_path(sf_dir, name))
+    path = table_path(sf_dir, name)
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     if name == "events":
         from pyspark.sql import functions as F
         from pyspark.sql import types as T

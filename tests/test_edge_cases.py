@@ -8,6 +8,9 @@ which always see the full fixture) with empty and singleton inputs.
 
 from __future__ import annotations
 
+import re
+
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -130,3 +133,24 @@ def test_kmv_union_smaller_than_k(spark, tmp_path):
     r = out[0].asDict()
     assert r["exact_union"] == 5
     assert r["est_union"] == 5.0
+
+
+@pytest.mark.parametrize(
+    "price, message",
+    [
+        (None, "requires a non-NULL domain (got NULL y)"),
+        (-1.0, "requires a non-negative domain (got a negative y)"),
+    ],
+    ids=["null", "negative"],
+)
+def test_spearman_wide_rank_precondition_names_cause(spark, tmp_path, price, message):
+    """q_stats_spearman's bucketed midranks need a non-NULL, non-negative
+    price domain; each violation fails loudly with its own cause."""
+    from data_warehouse_hive_spark.registry import load_all
+
+    spark.createDataFrame(
+        [(1.0, 5.0), (2.0, price), (3.0, 7.0)],
+        "l_quantity double, l_extendedprice double",
+    ).write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
+    with pytest.raises(Exception, match=re.escape(message)):
+        load_all()["q_stats_spearman"].fn(spark, str(tmp_path)).collect()

@@ -769,7 +769,7 @@ def test_basket_rules_no_cartesian(spark, sf_dir):
     assert uses_take_ordered(plan), plan
 
 
-def test_similar_items_joins_on_order_key(spark, sf_dir):
+def test_similar_items_no_cartesian(spark, sf_dir):
     plan = _plan(spark, sf_dir, "q_recs_similar_items")
     assert not any(
         "CartesianProduct" in s for s in join_strategies(plan)
