@@ -778,7 +778,13 @@ def q_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     All three metrics divide exact integers (pair count, item counts,
     basket total) — deterministic to the 1e-6 pin; the ≥2-support
     HAVING prunes the pair tail before the metric joins, and the 1-row
-    basket total broadcasts."""
+    basket total broadcasts.
+
+    Bounded-failure caveat: the `flatten(transform(...))` pair generator
+    materializes all m²/2 (pa, pb) structs of one m-item basket in a
+    single row before the explode, so one mega-basket is one quadratic
+    row.  ROADMAP open item 5 ("Mega-baskets") replaces it with a
+    two-level posexplode + per-position slice generator."""
     l = t(spark, sf_dir, "lineitem")
     # r15 (guide §2.4): one exchange on the order key builds each
     # basket's sorted distinct item array (collect_set = the old

@@ -59,10 +59,6 @@ class QuerySpec:
     fn: SparkQuery
     oracle: str | None
     doc: str = ""
-    # Marked True for queries whose oracle comparison needs a small float
-    # tolerance in the local test harness (e.g. stddev); the driver may be
-    # stricter — prefer exact idioms wherever possible.
-    approx: bool = False
     tags: tuple[str, ...] = field(default=())
 
 
@@ -72,7 +68,6 @@ REGISTRY: dict[str, QuerySpec] = {}
 def query(
     name: str,
     oracle: str | None = None,
-    approx: bool = False,
     tags: tuple[str, ...] = (),
 ) -> Callable[[SparkQuery], SparkQuery]:
     """Register a SURVEY §2 operator implementation."""
@@ -92,7 +87,7 @@ def query(
         wrapped.__name__ = fn.__name__
         wrapped.__doc__ = fn.__doc__
         REGISTRY[name] = QuerySpec(
-            name=name, fn=wrapped, oracle=oracle, doc=fn.__doc__ or "", approx=approx, tags=tags
+            name=name, fn=wrapped, oracle=oracle, doc=fn.__doc__ or "", tags=tags
         )
         return wrapped
 

@@ -3,19 +3,35 @@
 
 These are metadata-only operations: none of them touch data files except
 `table_info`'s row count (which the reference also runs — the only real
-query its backend ever issues, backend/hive_manager.py:400-401).
+query its backend ever issues, backend/hive_manager.py:400-401).  Listing
+and describe are driver-side commands (`SHOW TABLES`, `DESCRIBE TABLE`)
+that start no Spark job; `spark.catalog.listTables` / `listColumns`
+would drain their results through `toLocalIterator`, one job per
+partition.
+
+Table names may be qualified (`db.table`): every statement quotes them
+through `_ident`, one backquoted identifier per dot-separated part.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Row, SparkSession
+
+_DETAIL_MARKER = "# Detailed Table Information"
+
+
+def _ident(name: str) -> str:
+    """`db`.`table` SQL form of a possibly qualified table name."""
+    return ".".join(f"`{part.replace('`', '``')}`" for part in name.split("."))
 
 
 def show_tables(spark: SparkSession, database: str | None = None) -> list[str]:
-    """SHOW TABLES (reference backend/app.py:186-195)."""
-    return [t.name for t in spark.catalog.listTables(database)]
+    """SHOW TABLES (reference backend/app.py:186-195).  Temp views are
+    listed too, as `spark.catalog.listTables` lists them."""
+    in_db = f" IN {_ident(database)}" if database else ""
+    return [r["tableName"] for r in spark.sql(f"SHOW TABLES{in_db}").collect()]
 
 
 def table_exists(spark: SparkSession, name: str) -> bool:
@@ -29,17 +45,30 @@ def drop_table(spark: SparkSession, name: str, if_exists: bool = True) -> bool:
     only, data files stay (reference backend/hive_manager.py:120-133)."""
     existed = table_exists(spark, name)
     clause = "IF EXISTS " if if_exists else ""
-    spark.sql(f"DROP TABLE {clause}`{name}`")
+    spark.sql(f"DROP TABLE {clause}{_ident(name)}")
     return existed
+
+
+def _columns(rows: list[Row]) -> list[dict[str, str]]:
+    """The column rows of a DESCRIBE TABLE result: those before the first
+    blank or `#`-prefixed `col_name` (partition columns are repeated
+    after a `# Partition Information` header)."""
+    cols = []
+    for r in rows:
+        if not r["col_name"] or r["col_name"].startswith("#"):
+            break
+        cols.append({
+            "col_name": r["col_name"],
+            "data_type": r["data_type"],
+            "comment": r["comment"] or "",
+        })
+    return cols
 
 
 def describe(spark: SparkSession, name: str) -> list[dict[str, str]]:
     """DESCRIBE — column name/type/comment rows
     (reference backend/hive_manager.py:396-407)."""
-    return [
-        {"col_name": c.name, "data_type": c.dataType, "comment": c.description or ""}
-        for c in spark.catalog.listColumns(name)
-    ]
+    return _columns(spark.sql(f"DESCRIBE TABLE {_ident(name)}").collect())
 
 
 def repair_table(spark: SparkSession, name: str) -> None:
@@ -52,7 +81,7 @@ def repair_table(spark: SparkSession, name: str) -> None:
     except Exception:
         # unpartitioned tables: only the file cache needs refreshing
         pass
-    spark.sql(f"REFRESH TABLE `{name}`")
+    spark.sql(f"REFRESH TABLE {_ident(name)}")
 
 
 @dataclass
@@ -67,19 +96,19 @@ class TableInfo:
 def table_info(spark: SparkSession, name: str) -> TableInfo:
     """Schema + row count + external flag (reference
     backend/app.py:204-216 → backend/hive_manager.py:386-418: DESCRIBE,
-    SELECT COUNT(*), DESCRIBE FORMATTED + 'EXTERNAL' scrape)."""
-    cols = describe(spark, name)
-    row_count = spark.table(name).count()
-    detail = {
-        r["col_name"]: r["data_type"]
-        for r in spark.sql(f"DESCRIBE TABLE EXTENDED `{name}`").collect()
-        if r["col_name"]
-    }
+    SELECT COUNT(*), DESCRIBE FORMATTED + 'EXTERNAL' scrape).  One
+    DESCRIBE TABLE EXTENDED serves both the columns and the detail."""
+    rows = spark.sql(f"DESCRIBE TABLE EXTENDED {_ident(name)}").collect()
+    marker = next(
+        (i for i, r in enumerate(rows) if r["col_name"] == _DETAIL_MARKER),
+        len(rows),
+    )
+    detail = {r["col_name"]: r["data_type"] for r in rows[marker + 1:]}
     table_type = (detail.get("Type") or "").upper()
     return TableInfo(
         name=name,
-        columns=cols,
-        row_count=row_count,
+        columns=_columns(rows),
+        row_count=spark.table(name).count(),
         is_external=table_type == "EXTERNAL",
         location=detail.get("Location"),
     )

@@ -21,7 +21,8 @@ Sanic → HiveServer2, reference backend/app.py:32-118) collapses into
 `ingest_csv()` — one in-process call on a SparkSession.
 
 Scale: inference reads ONLY the bounded sample (mirroring the reference's
-sample discipline); registration moves no data; the actual reads are
+sample discipline) and infers over it as a JVM-local dataset, so no
+Python worker runs; registration moves no data; the actual reads are
 distributed schema-on-read scans, splittable per file by Spark.
 """
 
@@ -108,7 +109,9 @@ def infer_csv_schema(
     after `.csv(path)` would not bound the inference scan (it would scan
     the whole file and merely truncate the rows).  Instead the first
     N(+header) physical lines are read as text — a scan that stops early
-    — and CSV inference runs on that in-memory sample only.  Assumes
+    — and CSV inference runs on that sample only.  The sample goes back
+    to the JVM as a local dataset (a `LocalRelation`, no Python worker
+    runs) and Spark's CSV reader infers over it.  Assumes
     records are single-line (no embedded newlines in quoted fields),
     matching the reference's line-oriented sample.  At 100 TB this is
     what keeps ingest registration O(sample), not O(data).
@@ -122,7 +125,19 @@ def infer_csv_schema(
     n_lines = sample_rows + (1 if header else 0)
     lines = [r[0] for r in spark.read.text(path).limit(n_lines).collect()]
     delim = delimiter or sniff_delimiter("\n".join(lines[:50]))
-    sample = spark.read.options(
+    jvm = spark._jvm
+    # One gateway call carries the whole sample (py4j would convert a
+    # Python list one element per round trip); text-source lines never
+    # hold a "\n", so the JVM-side split gives the same lines back.
+    jlines = (
+        jvm.java.util.regex.Pattern.compile("\n")
+        .splitAsStream("\n".join(lines))
+        .toList()
+    )
+    jsample = spark._jsparkSession.createDataset(
+        jlines, jvm.org.apache.spark.sql.Encoders.STRING()
+    )
+    reader = spark.read.options(
         header=str(header).lower(),
         sep=delim,
         inferSchema="true",
@@ -131,8 +146,10 @@ def infer_csv_schema(
         timestampFormat="yyyy-MM-dd HH:mm:ss",
         nullValue="",
         samplingRatio="1.0",
-    ).csv(spark.sparkContext.parallelize(lines, 1))
-    return sample.schema, delim
+    )
+    # DataFrameReader.csv(Dataset[String]) — the call PySpark's own
+    # .csv(rdd) makes, minus its Python mapPartitions hop.
+    return reader._df(reader._jreader.csv(jsample)).schema, delim
 
 
 class SchemaValidationError(ValueError):

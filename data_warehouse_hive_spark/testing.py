@@ -107,14 +107,13 @@ def compare_to_oracle(
     spark_df,
     oracle: str,
     con: duckdb.DuckDBPyConnection,
-    float_rtol: float = 0.0,
     digest_row_limit: int | None = DIGEST_ROW_LIMIT,
 ) -> CompareResult:
     # NOTE: the COUNT(*) probe below executes the oracle once more even
     # when the result is tiny — callers that KNOW the relation is small
     # pass digest_row_limit=None to skip both the probe and the digest
     # machinery entirely (r11 advice).
-    if digest_row_limit is not None and float_rtol == 0.0:
+    if digest_row_limit is not None:
         n_oracle = con.execute(
             f"SELECT COUNT(*) FROM ({oracle}) __t"
         ).fetchone()[0]
@@ -148,24 +147,19 @@ def compare_to_oracle(
         problems.append(f"row count differs: spark={len(s_rows)} oracle={len(o_rows)}")
     if not problems:
         # Driver-hasher replica: its pandas sort_values canonicalization
-        # must neither crash (unhashable cells) nor disagree.  Skipped when
-        # a float tolerance is in play — bit-differing floats legitimately
-        # hash apart there.
-        if float_rtol == 0.0:
-            try:
-                s_hash = _driver_canon(spark_pdf)
-                o_hash = _driver_canon(oracle_pdf)
-            except TypeError as exc:
-                problems.append(f"driver-canon crash: {exc!r}")
-            else:
-                if s_hash != o_hash:
-                    problems.append("driver-canon hash mismatch")
+        # must neither crash (unhashable cells) nor disagree.
+        try:
+            s_hash = _driver_canon(spark_pdf)
+            o_hash = _driver_canon(oracle_pdf)
+        except TypeError as exc:
+            problems.append(f"driver-canon crash: {exc!r}")
+        else:
+            if s_hash != o_hash:
+                problems.append("driver-canon hash mismatch")
     if not problems:
         n_bad = 0
         for i, (sr, orow) in enumerate(zip(s_rows, o_rows)):
             if sr == orow:
-                continue
-            if float_rtol > 0 and _rows_close(sr, orow, float_rtol):
                 continue
             n_bad += 1
             if n_bad <= 3:
@@ -321,15 +315,3 @@ def compare_to_oracle_digest(
         oracle_rows=d_tup[0] if oracle_rows is None else oracle_rows,
         problems=problems,
     )
-
-
-def _rows_close(a: tuple, b: tuple, rtol: float) -> bool:
-    if len(a) != len(b):
-        return False
-    for x, y in zip(a, b):
-        if isinstance(x, float) and isinstance(y, float):
-            if not math.isclose(x, y, rel_tol=rtol, abs_tol=rtol):
-                return False
-        elif x != y:
-            return False
-    return True

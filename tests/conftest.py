@@ -43,3 +43,22 @@ def duck(sf_dir):
 @pytest.fixture(scope="session")
 def registry():
     return load_all()
+
+
+@pytest.fixture(scope="session")
+def jobs_run_by(spark):
+    """`jobs_run_by(group, fn)` runs `fn` under a Spark job group and
+    returns the ids of the jobs it started."""
+    sc = spark.sparkContext
+
+    def run(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description",
+                        "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+        return list(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

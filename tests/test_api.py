@@ -6,7 +6,10 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from data_warehouse_hive_spark import api
+from data_warehouse_hive_spark.sources import catalog as cat
 
 
 def _write_csv(tmp_path):
@@ -117,3 +120,35 @@ def test_drop_table_shape(spark, tmp_path):
     assert "api_drop_t" not in api.list_tables(spark)["tables"]
     again = api.drop_table(spark, "api_drop_t")
     assert again["status"] == "success"
+
+
+# --- database-qualified table names ("db.table") ----------------------------
+
+@pytest.fixture
+def other_db_table(spark):
+    spark.sql("CREATE DATABASE IF NOT EXISTS api_other")
+    spark.sql("CREATE TABLE api_other.t USING parquet AS SELECT 1 AS a, 'x' AS b")
+    yield "api_other.t"
+    spark.sql("DROP DATABASE IF EXISTS api_other CASCADE")
+
+
+def test_table_info_qualified_name(spark, other_db_table):
+    out = api.table_info(spark, other_db_table)
+    assert out["row_count"] == 1
+    assert out["columns"] == [
+        {"name": "a", "type": "int"}, {"name": "b", "type": "string"}
+    ]
+    assert out["is_external"] is False
+
+
+def test_drop_table_qualified_name(spark, other_db_table):
+    out = api.drop_table(spark, other_db_table)
+    assert out["status"] == "success"
+    assert not spark.catalog.tableExists(other_db_table)
+
+
+def test_describe_qualified_name(spark, other_db_table):
+    assert cat.describe(spark, other_db_table) == [
+        {"col_name": "a", "data_type": "int", "comment": ""},
+        {"col_name": "b", "data_type": "string", "comment": ""},
+    ]

@@ -591,3 +591,88 @@ def test_process_csv_drop_if_exists_payload(spark, tmp_path):
         assert [c["name"] for c in out2["columns"]] == ["a", "b", "c"]
     finally:
         cat.drop_table(spark, "dif_case")
+
+
+# --- driver-side metadata path ----------------------------------------------
+# infer_csv_schema infers over a JVM-local dataset; show_tables / describe
+# are SHOW TABLES / DESCRIBE TABLE commands.  Each must answer exactly what
+# the Spark path it replaced answers.
+
+_PARITY_ROWS = [
+    ["i", "big", "d", "flag", "day", "ts", "s", "e"],
+    ["1", "3000000000", "1.5", "true", "2024-03-01", "2024-03-01 12:34:56", "alpha", ""],
+    ["2", "-3000000001", "-0.25", "false", "2024-03-02", "2024-03-02 08:00:00", "beta", ""],
+    ["3", "", "2.0", "", "2024-03-03", "", "gamma", ""],
+    ["-4", "17", "1e3", "true", "", "2024-03-04 00:00:01", "", ""],
+    ["5", "42", "", "false", "2024-03-05", "2024-03-05 23:59:59", "delta", ""],
+]
+
+
+@pytest.mark.parametrize("header", [True, False])
+@pytest.mark.parametrize("delim", [",", ";", "\t", "|"])
+def test_sample_inference_matches_file_inference(spark, tmp_path, delim, header):
+    path = _write(tmp_path, "parity.csv", [delim.join(r) for r in _PARITY_ROWS])
+    schema, got_delim = infer_csv_schema(spark, path, header=header)
+    expected = spark.read.options(
+        header=str(header).lower(),
+        sep=delim,
+        inferSchema="true",
+        dateFormat="yyyy-MM-dd",
+        timestampFormat="yyyy-MM-dd HH:mm:ss",
+        nullValue="",
+        samplingRatio="1.0",
+    ).csv(path).schema
+    assert got_delim == delim
+    assert schema == expected
+    if header:
+        assert [f.dataType.simpleString() for f in schema.fields] == [
+            "int", "bigint", "double", "boolean", "date", "timestamp",
+            "string", "string",
+        ]
+
+
+@pytest.fixture
+def meta_tables(spark):
+    """A partitioned table with a column COMMENT in `meta_db`, one in the
+    current database, and a temp view."""
+    spark.sql("CREATE DATABASE IF NOT EXISTS meta_db")
+    spark.sql(
+        "CREATE TABLE meta_db.part_t (a INT COMMENT 'the a', b STRING, "
+        "p INT) USING parquet PARTITIONED BY (p)"
+    )
+    spark.sql("CREATE TABLE meta_local_t (x BIGINT) USING parquet")
+    spark.range(1).createOrReplaceTempView("meta_tv")
+    yield
+    spark.catalog.dropTempView("meta_tv")
+    spark.sql("DROP TABLE IF EXISTS meta_local_t")
+    spark.sql("DROP DATABASE IF EXISTS meta_db CASCADE")
+
+
+def test_show_tables_matches_list_tables(spark, meta_tables):
+    for db in (None, "meta_db"):
+        assert cat.show_tables(spark, db) == [
+            t.name for t in spark.catalog.listTables(db)
+        ]
+    assert {"meta_local_t", "meta_tv"} <= set(cat.show_tables(spark))
+    assert {"part_t", "meta_tv"} <= set(cat.show_tables(spark, "meta_db"))
+
+
+def test_describe_matches_list_columns(spark, meta_tables):
+    expected = [
+        {"col_name": c.name, "data_type": c.dataType,
+         "comment": c.description or ""}
+        for c in spark.catalog.listColumns("meta_db.part_t")
+    ]
+    assert cat.describe(spark, "meta_db.part_t") == expected
+    assert [c["col_name"] for c in expected] == ["a", "b", "p"]
+    assert expected[0]["comment"] == "the a"
+
+
+def test_listing_and_describe_run_no_spark_job(spark, meta_tables, jobs_run_by):
+    assert jobs_run_by("meta-show", lambda: cat.show_tables(spark)) == []
+    assert jobs_run_by(
+        "meta-show-db", lambda: cat.show_tables(spark, "meta_db")
+    ) == []
+    assert jobs_run_by(
+        "meta-describe", lambda: cat.describe(spark, "meta_db.part_t")
+    ) == []

@@ -19,9 +19,7 @@ def test_oracle_match(name, spark, sf_dir, duck):
 
     spec = REGISTRY[name]
     df = spec.fn(spark, sf_dir)
-    result = compare_to_oracle(
-        name, df, spec.oracle, duck, float_rtol=1e-9 if spec.approx else 0.0
-    )
+    result = compare_to_oracle(name, df, spec.oracle, duck)
     assert result.ok, str(result)
 
 

@@ -13,22 +13,10 @@ from data_warehouse_hive_spark import tables
 from data_warehouse_hive_spark.tables import parquet_schema, t, table_path
 
 
-def _jobs_run_by(spark, group, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        for key in ("spark.jobGroup.id", "spark.job.description",
-                    "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(key, None)
-    return list(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_repeat_read_runs_no_spark_job(spark, sf_dir):
+def test_repeat_read_runs_no_spark_job(spark, sf_dir, jobs_run_by):
     t(spark, sf_dir, "lineitem")
-    jobs = _jobs_run_by(
-        spark, "tables-repeat-read", lambda: t(spark, sf_dir, "lineitem").schema
+    jobs = jobs_run_by(
+        "tables-repeat-read", lambda: t(spark, sf_dir, "lineitem").schema
     )
     assert jobs == []
 
