@@ -648,31 +648,6 @@ COHORTS: list[tuple[str, list[str]]] = [
     ("r14", ["ext_r14"]),
 ]
 
-MEMOIZED_COLD_IDS = (
-    "q_embed_kmeans",
-    "q_embed_cluster_purity",
-    "q_graph_labelprop",
-    "q_graph_modularity",
-    "q_dedup_minhash",
-    "q_text_bpe_merge",
-    "q_text_bpe_encode",
-    "q_dedup_groups",
-    "q_graph_degree",
-    "q_graph_eccentricity",
-    "q_split_leakage_safe",
-    "q_dedup_source_matrix",
-    "q_graph_nmi",
-    "q_sim_recall",
-    "q_sim_mrr",
-    "q_sim_map",
-    "q_sim_ndcg",
-    "q_rank_fusion_per_query",
-    # r9: _KNN_CACHE consumers (init graph / refined graph / exact graph)
-    "q_embed_knn_refine",
-    "q_embed_knn_recall_lift",
-)
-
-
 def _force(df) -> None:
     """Execute the full plan distributed into the noop sink."""
     df.write.format("noop").mode("overwrite").save()
@@ -723,10 +698,12 @@ def run_cohort(cohort: str, out_path: str) -> None:
     Same recipe the r8 judge used for isolation re-runs — warm only this
     cohort's plans at sf0.001 (whole-stage codegen caches on generated
     source, which depends on the plan, not the data volume), touch the
-    target-SF parquet metadata, then best-of-2 each op at the target SF."""
+    target-SF parquet schemas, then best-of-2 each op at the target SF.
+    An op whose first timed run raised the memo miss count built a
+    session memo there; it is reported under memoized_cold."""
+    from data_warehouse_hive_spark import tables
     from data_warehouse_hive_spark.registry import load_all
     from data_warehouse_hive_spark.session import get_spark
-    from data_warehouse_hive_spark.tables import TABLES, table_path
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     groups = dict(GROUP_LISTS)
@@ -737,10 +714,11 @@ def run_cohort(cohort: str, out_path: str) -> None:
     for gkey in group_keys:
         for name in groups[gkey]:
             _force(registry[name].fn(spark, "/root/testdata/sf0.001"))
-    for name in TABLES:
-        spark.read.parquet(table_path(sf_dir, name)).schema
+    for name in tables.TABLES:
+        tables.parquet_schema(spark, tables.table_path(sf_dir, name))
 
     first_run: dict[str, float] = {}
+    memoized_cold: list[str] = []
 
     # Headline runs best-of-3 (r11 VERDICT task 7): the committed
     # headline total is the round-over-round comparison number, and on
@@ -755,16 +733,20 @@ def run_cohort(cohort: str, out_path: str) -> None:
 
     def timed(name: str) -> float:
         runs = []
-        for _ in range(n_runs):
+        misses = tables.memo_misses
+        for i in range(n_runs):
             t0 = time.perf_counter()
             _force(registry[name].fn(spark, sf_dir))
             runs.append(time.perf_counter() - t0)
+            if i == 0 and tables.memo_misses > misses:
+                memoized_cold.append(name)
         first_run[name] = round(runs[0], 3)
         return round(min(runs), 3)
 
     out: dict = {
         "groups": {},
         "first_run": first_run,
+        "memoized_cold": memoized_cold,
         "load_avg_start": [round(x, 2) for x in os.getloadavg()],
         "best_of": n_runs,
         # r14 VERDICT task 2: PROVE the core count to the driver.
@@ -799,6 +781,7 @@ def main() -> None:
 
     merged_groups: dict[str, dict] = {}
     first_run: dict[str, float] = {}
+    memoized_cold: list[str] = []
     cohort_sec: dict[str, float] = {}
     cohort_load: dict[str, list[float]] = {}
     cohort_best_of: dict[str, int] = {}
@@ -827,6 +810,7 @@ def main() -> None:
         os.unlink(out_path)
         merged_groups.update(child["groups"])
         first_run.update(child["first_run"])
+        memoized_cold += child["memoized_cold"]
         cohort_load[cohort] = child.get("load_avg_start", [])
         cohort_best_of[cohort] = child.get("best_of", 2)
         cohort_cpus_effective[cohort] = child.get("cpus_effective")
@@ -973,11 +957,7 @@ def main() -> None:
             "regressions_normalized_gt20pct": flagged,
             # moved here from stdout when the line hit the 2000-char
             # tail budget (see below)
-            "memoized_cold": {
-                name: first_run[name]
-                for name in MEMOIZED_COLD_IDS
-                if name in first_run
-            },
+            "memoized_cold": {name: first_run[name] for name in memoized_cold},
             # queries whose build step runs a bounded fixpoint
             # driver-side (collect of a capped relation + local
             # iteration, per the q_embed_pca precedent): their timings

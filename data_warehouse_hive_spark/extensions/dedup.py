@@ -31,7 +31,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_warehouse_hive_spark.registry import query
-from data_warehouse_hive_spark.tables import spread, t
+from data_warehouse_hive_spark.tables import session_memo, spread, t, table_path
 
 # MinHash configuration: K hashes in B bands of R rows (K = B*R).
 MINHASH_K = 12
@@ -305,30 +305,18 @@ def minhash_candidate_pairs(docs: DataFrame, sig: DataFrame | None = None) -> Da
     )
 
 
-# Session-scoped memo for the LSH candidate-pair relation, keyed
-# (applicationId, sf_dir) — the same sanctioned deterministic-state
-# pattern as graph._LPA_CACHE / similarity._KMEANS_CACHE: the pair list
-# is a pure function of the corpus (md5 hashing end to end), every
-# consumer needs the IDENTICAL relation, and the production shape is a
-# candidate index built once per corpus build and persisted
-# (q_dedup_incremental documents that contract).  The localCheckpoint
-# means a second consumer scans materialized blocks — zero document
-# re-scans (r7 verdict item 5); bench reports the one-time build under
-# first_run / memoized_cold.
-_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def candidate_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The (doc_a < doc_b) LSH candidate pairs for this corpus, built at
-    most once per session and checkpointed."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _PAIRS_CACHE.get(key)
-    if hit is None:
-        hit = minhash_candidate_pairs(
+    most once per session and corpus version and checkpointed, so a
+    second consumer scans materialized blocks instead of the documents."""
+    return session_memo(
+        spark,
+        ("pairs", sf_dir),
+        lambda: minhash_candidate_pairs(
             t(spark, sf_dir, "documents")
-        ).localCheckpoint(eager=False)
-        _PAIRS_CACHE[key] = hit
-    return hit
+        ).localCheckpoint(eager=False),
+        reads=(table_path(sf_dir, "documents"),),
+    )
 
 
 @query(

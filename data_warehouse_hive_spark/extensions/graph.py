@@ -24,7 +24,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from data_warehouse_hive_spark.registry import query
-from data_warehouse_hive_spark.tables import t
+from data_warehouse_hive_spark.session import conf_scope
+from data_warehouse_hive_spark.tables import session_memo, t, table_path
 
 PR_SCALE = 10**12
 PR_ITERS = 3
@@ -966,27 +967,22 @@ def _o_labelprop() -> str:
     """
 
 
-# Converged-LPA memo, keyed by (application, sf_dir) — the same sanctioned
-# shared-state pattern as similarity._KMEANS_CACHE: the loop is
-# deterministic end to end (fixed rounds, count-desc/label-asc tiebreak),
-# so q_graph_labelprop and q_graph_modularity reusing ONE run per session
-# cannot change either result; the relations are localCheckpointed, so a
-# reuse scans materialized blocks instead of re-running the LSH pipeline.
-_LPA_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
 def _lpa_labels(spark: SparkSession, sf_dir: str):
-    """Run the bounded synchronous LPA loop; returns (symmetrized edge
-    relation, final (node, lbl) labels) — shared by q_graph_labelprop
-    and q_graph_modularity (memoized per session, see _LPA_CACHE)."""
+    """The bounded synchronous LPA loop's (symmetrized edge relation,
+    final (node, lbl) labels) — shared by q_graph_labelprop,
+    q_graph_modularity and q_graph_nmi through one session_memo run.
+    The loop is deterministic end to end (fixed rounds, count-desc/
+    label-asc tiebreak) and its relations are localCheckpointed."""
+    return session_memo(
+        spark, ("lpa", sf_dir), lambda: _lpa_build(spark, sf_dir),
+        reads=(table_path(sf_dir, "documents"),),
+    )
+
+
+def _lpa_build(spark: SparkSession, sf_dir: str):
     from data_warehouse_hive_spark.extensions.dedup import (
         candidate_pairs_cached,
     )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _LPA_CACHE.get(key)
-    if hit is not None:
-        return hit
 
     pairs = candidate_pairs_cached(spark, sf_dir)
     und = (
@@ -1014,7 +1010,6 @@ def _lpa_labels(spark: SparkSession, sf_dir: str):
             .select("node", "lbl")
             .localCheckpoint(eager=False)
         )
-    _LPA_CACHE[key] = (und, labels)
     return und, labels
 
 
@@ -1653,7 +1648,7 @@ def q_graph_nmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     community by construction; their count is n_docs vs the corpus).
 
     Reuses the session-memoized LPA labels (one loop per session —
-    graph._LPA_CACHE); everything downstream is a contingency hash
+    `_lpa_labels`); everything downstream is a contingency hash
     aggregate on the (community, source) domain and entropy terms
     quantized to 1e9 longs on exactly-representable ratios before the
     cross-cell sums.  NMI is fixed-order double math, rounded at 6.
@@ -2316,9 +2311,7 @@ def q_graph_betweenness_approx(
         1,
         min(spark.sparkContext.defaultParallelism, n_edges // 25_000),
     )
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
+    with conf_scope(spark, {"spark.sql.shuffle.partitions": str(loop_parts)}):
         n_nodes = nodes.count()
         srcs = (
             nodes.orderBy(F.md5(F.col("node").cast("string")), "node")
@@ -2457,6 +2450,4 @@ def q_graph_betweenness_approx(
             # the caller's collect then reads checkpointed blocks
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     return out

@@ -42,7 +42,7 @@ from data_warehouse_hive_spark.extensions.similarity import (
     q_embed_knn,
 )
 from data_warehouse_hive_spark.registry import query
-from data_warehouse_hive_spark.tables import spread, t
+from data_warehouse_hive_spark.tables import session_memo, spread, t, table_path
 
 # ---------------------------------------------------------------------------
 # Second independent hyperplane family ("lsh2" seed) — same carrier-exact
@@ -228,30 +228,6 @@ _O_ROUND2 = f"""
 """
 
 
-# Session memo, same sanctioned shared-state pattern as
-# similarity._EVAL_TOPK_CACHE: the init graph, the refined graph and the
-# full-corpus exact graph are deterministic (carrier buckets, carrier
-# cosines, vec_id tiebreaks) and consumed by BOTH q_embed_knn_refine and
-# q_embed_knn_recall_lift — in production each is built once per index
-# build and persisted, which the per-session localCheckpoint models.
-_KNN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def _memo(spark: SparkSession, sf_dir: str, key: str, build) -> DataFrame:
-    scope = (spark.sparkContext.applicationId, sf_dir)
-    k = (*scope, key)
-    hit = _KNN_CACHE.get(k)
-    if hit is None:
-        # Bound the memo: entries are lazily-checkpointed DataFrames, so
-        # keeping other (app, sf_dir) scopes would pin them for the app
-        # lifetime — evict every scope we are no longer iterating on.
-        for stale in [s for s in _KNN_CACHE if s[:2] != scope]:
-            del _KNN_CACHE[stale]
-        hit = build()
-        _KNN_CACHE[k] = hit
-    return hit
-
-
 def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spread(
         t(spark, sf_dir, "embeddings").select(
@@ -274,10 +250,12 @@ def _topk(scored: DataFrame) -> DataFrame:
 def knn_init_2table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2-table LSH init graph: candidates share a bucket in EITHER
     hyperplane family; exact cosine; top-k per node."""
-    def build() -> DataFrame:
-        return _build_init_2table(spark, sf_dir)
-
-    return _memo(spark, sf_dir, "init2", build)
+    return session_memo(
+        spark,
+        ("knn", sf_dir, "init2"),
+        lambda: _build_init_2table(spark, sf_dir),
+        reads=(table_path(sf_dir, "embeddings"),),
+    )
 
 
 def _build_init_2table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -322,27 +300,31 @@ def _build_init_2table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def knn_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One NN-descent round over the 2-table init graph."""
-    def build() -> DataFrame:
-        return _descent_round(
+    return session_memo(
+        spark,
+        ("knn", sf_dir, "refined"),
+        lambda: _descent_round(
             spark,
             sf_dir,
             knn_init_2table(spark, sf_dir).select("vec_id", "neighbor_id"),
-        )
-
-    return _memo(spark, sf_dir, "refined", build)
+        ),
+        reads=(table_path(sf_dir, "embeddings"),),
+    )
 
 
 def knn_refined2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Second NN-descent round — the operator applied to its own output
     (the composability the round-1 docstring claims, now exercised)."""
-    def build() -> DataFrame:
-        return _descent_round(
+    return session_memo(
+        spark,
+        ("knn", sf_dir, "refined2"),
+        lambda: _descent_round(
             spark,
             sf_dir,
             knn_refined(spark, sf_dir).select("vec_id", "neighbor_id"),
-        )
-
-    return _memo(spark, sf_dir, "refined2", build)
+        ),
+        reads=(table_path(sf_dir, "embeddings"),),
+    )
 
 
 def _descent_round(
@@ -558,7 +540,10 @@ def q_embed_knn_recall_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
             eager=False
         )
 
-    exact = _memo(spark, sf_dir, "exact_graph_smp", build_exact)
+    exact = session_memo(
+        spark, ("knn", sf_dir, "exact_graph_smp"), build_exact,
+        reads=(table_path(sf_dir, "embeddings"),),
+    )
 
     g1 = q_embed_knn(spark, sf_dir).select("vec_id", "neighbor_id")
     g2 = knn_init_2table(spark, sf_dir).select("vec_id", "neighbor_id")

@@ -1162,7 +1162,7 @@ _O_EVAL_LISTS = f"""
 
 def _eval_lists(spark: SparkSession, sf_dir: str):
     """Shared eval fixture: (exact ground-truth top-k, LSH ranked top-k),
-    session-memoized in similarity._EVAL_TOPK_CACHE."""
+    session-memoized by similarity.eval_exact_topk / eval_lsh_topk."""
     exact = eval_exact_topk(spark, sf_dir).select("query_id", "vec_id")
     ranked = eval_lsh_topk(spark, sf_dir).select(
         F.col("query_id").alias("l_query_id"),

@@ -17,7 +17,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_warehouse_hive_spark.registry import davg, o_davg, query
-from data_warehouse_hive_spark.tables import spread, t
+from data_warehouse_hive_spark.tables import session_memo, spread, t, table_path
 
 # Tiny per-language stopword marker lists for the n-gram/stopword language
 # heuristic.  Chosen from the fixture corpus vocabulary; the heuristic is
@@ -2217,22 +2217,18 @@ def _o_bpe_merge() -> str:
     )
 
 
-# Learned-merge memo keyed (applicationId, sf_dir) — the sanctioned
-# deterministic-state pattern (kmeans/LPA/pairs memos): the merge table
-# is a pure function of the corpus (exact integer counts, total-order
-# tiebreak), and a production tokenizer trains once then encodes many
-# times, so q_text_bpe_merge (train) and q_text_bpe_encode (apply)
-# sharing one training run models the real pipeline.
-_BPE_CACHE: dict[tuple[str, str], list] = {}
-
-
 def _bpe_merges(spark: SparkSession, sf_dir: str) -> list:
-    """Run the bounded BPE merge loop; returns the R-row merge table as
-    (round, left, right, merged, pair_count) tuples."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _BPE_CACHE.get(key)
-    if hit is not None:
-        return hit
+    """The bounded BPE merge loop's R-row merge table as (round, left,
+    right, merged, pair_count) tuples.  A production tokenizer trains
+    once and encodes many times, so q_text_bpe_merge (train) and
+    q_text_bpe_encode (apply) share one session_memo training run."""
+    return session_memo(
+        spark, ("bpe", sf_dir), lambda: _bpe_train(spark, sf_dir),
+        reads=(table_path(sf_dir, "documents"),),
+    )
+
+
+def _bpe_train(spark: SparkSession, sf_dir: str) -> list:
     d = spread(t(spark, sf_dir, "documents").select("text"), spark)
     wf = (
         d.select(F.explode(tokens(F.lower(F.col("text")))).alias("w"))
@@ -2283,7 +2279,6 @@ def _bpe_merges(spark: SparkSession, sf_dir: str) -> list:
                 F.lit("|" + top["a"] + top["b"] + "|"),
             ).alias("s"),
         ).localCheckpoint(eager=False)
-    _BPE_CACHE[key] = merges
     return merges
 
 

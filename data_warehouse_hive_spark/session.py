@@ -15,6 +15,7 @@ else (AQE, broadcast thresholds, Arrow) scales as-is.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -161,3 +162,20 @@ def ensure_engine_conf(spark: SparkSession) -> SparkSession:
         except Exception:  # pragma: no cover - conf may be static in some builds
             pass
     return spark
+
+
+@contextmanager
+def conf_scope(spark: SparkSession, settings: dict[str, str]):
+    """Set runtime conf for the body of a `with` block, then restore each
+    prior value; a key that was unset before is unset again."""
+    prior = {k: spark.conf.get(k, None) for k in settings}
+    try:
+        for k, v in settings.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

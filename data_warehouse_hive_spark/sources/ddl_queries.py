@@ -23,6 +23,7 @@ from data_warehouse_hive_spark.sources.csv_ingest import (
     sanitize_table_name,
     sniff_delimiter,
 )
+from data_warehouse_hive_spark.session import conf_scope
 from data_warehouse_hive_spark.tables import t
 
 
@@ -923,12 +924,8 @@ def ddl_insert_overwrite_partition(spark: SparkSession, sf_dir: str) -> DataFram
     fixed = src.filter(F.col("pt") == 1).withColumn(
         "o_orderstatus", F.lit("B")
     )
-    old_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with conf_scope(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         fixed.write.mode("overwrite").partitionBy("pt").parquet(d)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", old_mode)
     after = spark.read.parquet(d)
     after_other = after.filter(F.col("pt") != 1).count()
     backfilled = (
@@ -1021,13 +1018,6 @@ def ddl_aqe_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.skewJoin.enabled": "true",
     }
-    old = {}
-    for k in lowered:
-        try:
-            old[k] = spark.conf.get(k)
-        except Exception:
-            old[k] = None
-
     def skewed_join() -> DataFrame:
         # Two fixture-scale traps, both instructive at 100 TB:
         # (1) payload must be high-entropy — skew detection reads
@@ -1084,17 +1074,9 @@ def ddl_aqe_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         n = sum(r["n"] for r in rows)
         return df._jdf.queryExecution().executedPlan().toString(), n
 
-    try:
-        for k, v in lowered.items():
-            spark.conf.set(k, v)
+    with conf_scope(spark, lowered):
         plan_on, n_rows = run(True)
         plan_off, n_rows_off = run(False)
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     skew_applied = (
         "isFinalPlan=true" in plan_on
         and "skew=true" in plan_on
@@ -1150,9 +1132,7 @@ def ddl_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # pin the sort-merge path (a small side would otherwise broadcast and
     # mask the property under test: bucket layout replacing the shuffle)
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with conf_scope(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         joined = bucketed_join(spark, a, b, "o_custkey")
         plan = joined._jdf.queryExecution().executedPlan().toString()
         # only shuffle exchanges count — BroadcastExchange moves the small
@@ -1161,8 +1141,6 @@ def ddl_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "Exchange rangepartitioning"
         )
         n_rows = joined.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
     cat.drop_table(spark, a)
     cat.drop_table(spark, b)
     return spark.createDataFrame(
@@ -1267,14 +1245,10 @@ def ddl_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta.write.partitionBy("day").mode("append").parquet(src_dir)
     changed_days = [r["day"] for r in delta.select("day").distinct().collect()]
 
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with conf_scope(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         mv_for(changed_days).write.partitionBy("day").mode("overwrite").parquet(
             mv_dir
         )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
     mv = spark.read.parquet(mv_dir).cache()
     try:
@@ -2219,11 +2193,7 @@ def ddl_knn_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
         extra, missing, n_index = _multiset_compare(merged, rebuild)
 
         # candidate generation: bucket self-join must be shuffle-free
-        old_thresh = spark.conf.get(
-            "spark.sql.autoBroadcastJoinThreshold", "10485760"
-        )
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
+        with conf_scope(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
             left = spark.table(name).select("bkey", "vec_id")
             right = spark.table(name).select(
                 "bkey", F.col("vec_id").alias("vec_b")
@@ -2236,10 +2206,6 @@ def ddl_knn_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "Exchange hashpartitioning"
             ) + plan.count("Exchange rangepartitioning")
             n_cand = cand.count()
-        finally:
-            spark.conf.set(
-                "spark.sql.autoBroadcastJoinThreshold", old_thresh
-            )
         n_batch = int(new_rows.count())
     finally:
         cat.drop_table(spark, name)
@@ -2529,11 +2495,7 @@ def ddl_minhash_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
         # count() below was a second full scan of the catalog table (r15)
         extra, missing, n_index = _multiset_compare(merged, rebuild)
 
-        old_thresh = spark.conf.get(
-            "spark.sql.autoBroadcastJoinThreshold", "10485760"
-        )
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
+        with conf_scope(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
             # Hot-bucket admission cap (r11 VERDICT task 1, the
             # q_dedup_minhash_capped guardrail wired into the persisted
             # index): bucket sizes come from a groupBy on the bucketBy
@@ -2586,10 +2548,6 @@ def ddl_minhash_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 .distinct()
                 .count()
-            )
-        finally:
-            spark.conf.set(
-                "spark.sql.autoBroadcastJoinThreshold", old_thresh
             )
         n_batch = int(new_rows.count())
     finally:

@@ -11,6 +11,12 @@ Each table's schema is held per session and per file version, the way a
 catalog holds it (``parquet_schema``): the first read of a file infers
 the schema from its footer, which costs one Spark job; every later read
 passes that schema to the reader and runs no inference job.
+
+That store is ``session_memo``, the package's one memo: it also holds
+the shared indexes several queries build from the same tables (LSH
+candidate pairs, k-means and LPA fixpoints, kNN graphs, evaluation
+top-k lists, BPE merges), each keyed by the version of the files it
+reads so a rewritten table is never served stale.
 """
 
 from __future__ import annotations
@@ -40,15 +46,6 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-# Inferred parquet schemas keyed by (applicationId, path, file version).
-# The version is the stat of the file (of every file under a directory),
-# so a rewritten or replaced file is a new key and never served a stale
-# schema.  The inference-relevant conf (nanosAsLong) is pinned per
-# session by get_spark / ensure_engine_conf, so the session id stands in
-# for it.
-_SCHEMA_CACHE: dict[tuple, StructType] = {}
-
-
 def _file_version(path: str) -> tuple:
     if not os.path.isdir(path):
         st = os.stat(path)
@@ -62,19 +59,53 @@ def _file_version(path: str) -> tuple:
     return tuple(sorted(version))
 
 
+_MEMO: dict[tuple, object] = {}
+memo_misses = 0
+
+
+def session_memo(spark: SparkSession, key: tuple, build, reads=()):
+    """`build()`, run at most once per session and version of the files
+    it reads.
+
+    The package's one "build once per session" store: inferred parquet
+    schemas, and the checkpointed indexes and driver-side fixpoints that
+    several queries share (LSH candidate pairs, converged k-means and
+    LPA, evaluation top-k lists, kNN graphs, learned BPE merges).
+    Memoizing is sound because every build is deterministic — a pure
+    function of the files it reads — so sharing one result cannot
+    change any consumer's answer; a production system likewise builds
+    such an index once per corpus version and persists it, which the
+    per-session entry (often a localCheckpoint) models.
+
+    An entry is keyed by ``(applicationId, key, file versions)``, where
+    `key` names the value (e.g. ``("pairs", sf_dir)``) and `reads` lists
+    the table paths the build reads; a rewritten file is a new version,
+    so it is never served stale.  The session conf the builds depend on
+    (nanosAsLong, timezone) is pinned by get_spark / ensure_engine_conf,
+    so the applicationId stands in for it.  On a miss every entry that
+    can never hit again is dropped — another session's, and older file
+    versions of `key` — before `build()` runs; a build may itself call
+    session_memo.
+    """
+    global memo_misses
+    app = spark.sparkContext.applicationId
+    full = (app, key, tuple(_file_version(p) for p in reads))
+    if full in _MEMO:
+        return _MEMO[full]
+    memo_misses += 1
+    for stale in [k for k in _MEMO if k[0] != app or k[1] == key]:
+        del _MEMO[stale]
+    value = _MEMO[full] = build()
+    return value
+
+
 def parquet_schema(spark: SparkSession, path: str) -> StructType:
     """The schema Spark infers for the parquet file at `path`, inferred
     once per session and file version."""
-    app = spark.sparkContext.applicationId
-    key = (app, path, _file_version(path))
-    schema = _SCHEMA_CACHE.get(key)
-    if schema is None:
-        # entries of a stopped session can never hit again
-        for stale in [k for k in _SCHEMA_CACHE if k[0] != app]:
-            del _SCHEMA_CACHE[stale]
-        schema = spark.read.parquet(path).schema
-        _SCHEMA_CACHE[key] = schema
-    return schema
+    return session_memo(
+        spark, ("schema", path), lambda: spark.read.parquet(path).schema,
+        reads=(path,),
+    )
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

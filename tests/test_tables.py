@@ -1,15 +1,21 @@
-"""The catalog-held parquet schema behind `tables.t`: repeat reads run no
-inference job, a rewritten file is re-inferred, and entries of another
-session are evicted."""
+"""The session memo behind `tables.t` and the shared indexes: repeat
+reads run no inference job, a rewritten file is re-inferred and rebuilds
+what was built from it, and entries that can never hit again are
+evicted."""
 
 from __future__ import annotations
 
 import os
 
 import pandas as pd
+import pyarrow.parquet as pq
 import pytest
 
 from data_warehouse_hive_spark import tables
+from data_warehouse_hive_spark.extensions.dedup import (
+    candidate_pairs_cached,
+    minhash_candidate_pairs,
+)
 from data_warehouse_hive_spark.tables import parquet_schema, t, table_path
 
 
@@ -45,15 +51,40 @@ def test_rewritten_file_serves_new_schema(spark, tmp_path, layout):
 
 
 def test_other_session_entries_evicted(spark, tmp_path):
+    """A miss drops the entries that can never hit again: another
+    session's, and an older file version of the same key."""
     path = str(tmp_path / "one.parquet")
     pd.DataFrame({"a": [1]}).to_parquet(path)
-    stale = ("app-of-a-stopped-session", path, (0, 0))
-    tables._SCHEMA_CACHE[stale] = parquet_schema(spark, path)
+    stale = ("app-of-a-stopped-session", ("schema", path), ((0, 0),))
+    tables._MEMO[stale] = parquet_schema(spark, path)
+    app = spark.sparkContext.applicationId
+    (first,) = [k for k in tables._MEMO if k[:2] == (app, ("schema", path))]
 
     other = str(tmp_path / "two.parquet")
     pd.DataFrame({"b": [1]}).to_parquet(other)
     parquet_schema(spark, other)
 
-    assert stale not in tables._SCHEMA_CACHE
-    app = spark.sparkContext.applicationId
-    assert {k[1] for k in tables._SCHEMA_CACHE if k[0] == app} >= {path, other}
+    assert stale not in tables._MEMO
+    assert {k[1] for k in tables._MEMO if k[0] == app} >= {
+        ("schema", path), ("schema", other)
+    }
+
+    pd.DataFrame({"a": [1, 2], "c": [3, 4]}).to_parquet(path)
+    parquet_schema(spark, path)
+    assert first not in tables._MEMO
+
+
+def test_rewritten_documents_rebuild_candidate_pairs(spark, tmp_path):
+    """The LSH candidate-pair memo is keyed by the documents file
+    version: after the file is rewritten in place, the same session gets
+    the pairs of the new corpus, not the memoized ones."""
+    src = pq.read_table(table_path(tables.DEFAULT_SF_DIR, "documents"))
+    path = table_path(str(tmp_path), "documents")
+    pq.write_table(src, path)
+    n_full = candidate_pairs_cached(spark, str(tmp_path)).count()
+
+    pq.write_table(src.slice(0, src.num_rows // 2), path)
+    fresh = minhash_candidate_pairs(t(spark, str(tmp_path), "documents"))
+    n_half = fresh.count()
+    assert n_half != n_full
+    assert candidate_pairs_cached(spark, str(tmp_path)).count() == n_half

@@ -19,10 +19,7 @@ from data_warehouse_hive_spark.session import get_spark  # noqa: E402
 
 
 def _force(df):
-    try:
-        df.write.format("noop").mode("overwrite").save()
-    except Exception:
-        df.count()
+    df.write.format("noop").mode("overwrite").save()
 
 
 spark = get_spark(app_name="r15-time-ops")
