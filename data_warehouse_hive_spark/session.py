@@ -10,6 +10,19 @@ across engines, and shuffle partitioning sized from the environment.
 At 100 TB on a real cluster the same builder applies — only master() and the
 shuffle-partition count change (cores × ~2-3 tasks per core); everything
 else (AQE, broadcast thresholds, Arrow) scales as-is.
+
+PySpark's DataFrame call-site capture is off in sessions `get_spark`
+builds (`spark.python.sql.dataFrameDebugging.enabled=false`).  With it
+on, every Column and DataFrame method runs through a wrapper that reads
+a conf, looks up a JVM class, walks the Python stack and sets then
+clears the origin on the JVM: `F.col` costs 13 py4j round trips instead
+of 3, and building a query plan is dominated by that chatter.  What is
+lost is the Python `file:line` fragment in the DataFrameQueryContext of
+a runtime error; the error class and message are unchanged.  The key is
+a static conf, so it can only be set here, in the builder;
+`ensure_engine_conf` cannot retrofit it, and a session built elsewhere
+(an external driver's) keeps PySpark's default.  PySpark reads the flag
+once per process, from the first active session that asks.
 """
 
 from __future__ import annotations
@@ -54,6 +67,9 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # no Python call-site capture per Column/DataFrame call (module
+        # docstring); static, so it cannot be set after the build
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # local default 16m: sf0.1 files are a few tens of MB, so 128m (the
         # right value for a real cluster against 100 TB) would scan in 2-3
         # tasks and idle 29 of 32 cores; env-overridable for deployment

@@ -9,17 +9,51 @@ that start no Spark job; `spark.catalog.listTables` / `listColumns`
 would drain their results through `toLocalIterator`, one job per
 partition.
 
+Row counts come from ingest-time stats where they are still true, the
+way Hive keeps `numRows` in its metastore.  A validated ingest has
+already counted the file, so `csv_ingest.ingest_csv` registers the table
+with two table properties: the row count (`ROWS_PROPERTY`) and a token of
+the file version it counted (`VERSION_PROPERTY`, from `file_token`).
+`table_info` serves the stored count only while the token of the
+table's location still matches; a rewritten file, a table without the
+properties, or a location that is not a local file falls back to a
+`COUNT(*)` scan.  The stats belong to the table definition: they persist
+with it in a Hive metastore and go away with DROP TABLE.
+
 Table names may be qualified (`db.table`): every statement quotes them
 through `_ident`, one backquoted identifier per dot-separated part.
 """
 
 from __future__ import annotations
 
+import hashlib
+import os
 from dataclasses import dataclass
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import Row, SparkSession
 
+from data_warehouse_hive_spark.tables import _file_version
+
 _DETAIL_MARKER = "# Detailed Table Information"
+ROWS_PROPERTY = "dwh.ingest.rows"
+VERSION_PROPERTY = "dwh.ingest.file_version"
+
+
+def file_token(location: str) -> str | None:
+    """A short digest of the file version at `location` (a local path or
+    a `file:` URI), by the session memo's rule (mtime and size of each
+    file); None when it is not a local file that can be stat'ed."""
+    uri = urlparse(location)
+    if uri.scheme == "file":
+        location = unquote(uri.path)
+    elif uri.scheme:
+        return None
+    try:
+        version = _file_version(os.path.abspath(location))
+    except OSError:
+        return None
+    return hashlib.sha1(repr(version).encode()).hexdigest()[:16]
 
 
 def _ident(name: str) -> str:
@@ -93,11 +127,22 @@ class TableInfo:
     location: str | None
 
 
+def _table_properties(text: str | None) -> dict[str, str]:
+    """The `[k1=v1, k2=v2]` value of DESCRIBE's `Table Properties` row."""
+    pairs = (text or "").strip("[]").split(", ")
+    return dict(p.split("=", 1) for p in pairs if "=" in p)
+
+
 def table_info(spark: SparkSession, name: str) -> TableInfo:
     """Schema + row count + external flag (reference
     backend/app.py:204-216 → backend/hive_manager.py:386-418: DESCRIBE,
     SELECT COUNT(*), DESCRIBE FORMATTED + 'EXTERNAL' scrape).  One
-    DESCRIBE TABLE EXTENDED serves both the columns and the detail."""
+    DESCRIBE TABLE EXTENDED serves the columns, the detail and the
+    ingest-time stats.
+
+    The row count is the stored one only while the file version it was
+    counted at still matches the table's location (module docstring);
+    otherwise it is a `COUNT(*)` over the table, two Spark jobs."""
     rows = spark.sql(f"DESCRIBE TABLE EXTENDED {_ident(name)}").collect()
     marker = next(
         (i for i, r in enumerate(rows) if r["col_name"] == _DETAIL_MARKER),
@@ -105,12 +150,19 @@ def table_info(spark: SparkSession, name: str) -> TableInfo:
     )
     detail = {r["col_name"]: r["data_type"] for r in rows[marker + 1:]}
     table_type = (detail.get("Type") or "").upper()
+    location = detail.get("Location")
+    props = _table_properties(detail.get("Table Properties"))
+    stored = props.get(VERSION_PROPERTY)
+    if stored and location and file_token(location) == stored:
+        row_count = int(props[ROWS_PROPERTY])
+    else:
+        row_count = spark.table(name).count()
     return TableInfo(
         name=name,
         columns=_columns(rows),
-        row_count=spark.table(name).count(),
+        row_count=row_count,
         is_external=table_type == "EXTERNAL",
-        location=detail.get("Location"),
+        location=location,
     )
 
 

@@ -24,6 +24,16 @@ Scale: inference reads ONLY the bounded sample (mirroring the reference's
 sample discipline) and infers over it as a JVM-local dataset, so no
 Python worker runs; registration moves no data; the actual reads are
 distributed schema-on-read scans, splittable per file by Spark.
+
+Per-call cost: at upload sizes every step is overhead-bound, so each
+step is one statement the JVM parses, not a chain of Python Column
+calls (each a py4j round trip).  Validation is one `selectExpr` of SQL
+aggregate strings, which also quotes every header as an identifier (a
+header such as `unit.price` is a column name, not struct access).  The
+row count that validation takes is kept with the table as ingest-time
+stats (`catalog.ROWS_PROPERTY` / `catalog.VERSION_PROPERTY`), keyed by
+the file version seen before the scan, so `catalog.table_info` answers
+COUNT(*) without a second scan while the file is unchanged.
 """
 
 from __future__ import annotations
@@ -37,6 +47,12 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from data_warehouse_hive_spark.sources.catalog import (
+    ROWS_PROPERTY,
+    VERSION_PROPERTY,
+    file_token,
+)
 
 SNIFF_DELIMITERS = ",;\t|"  # reference backend/csv_processor.py:29
 SNIFF_PREFIX_BYTES = 1024  # reference backend/csv_processor.py:90
@@ -152,6 +168,16 @@ def infer_csv_schema(
     return reader._df(reader._jreader.csv(jsample)).schema, delim
 
 
+def _sql_string(text: str) -> str:
+    """`text` escaped for a single-quoted SQL string literal."""
+    return text.replace("\\", "\\\\").replace("'", "\\'")
+
+
+def _quote(name: str) -> str:
+    """`name` as one backquoted SQL identifier, backquotes doubled."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 class SchemaValidationError(ValueError):
     """Raised in strict mode when ingest-time validation fails — the twin
     of pandera's SchemaError surfacing through the reference pipeline
@@ -182,11 +208,16 @@ def validate_against_schema(
     state per task — the shape that still works when the CSV is a 100 TB
     directory.
 
+    The aggregates are SQL strings handed to one `selectExpr`, so the
+    JVM parses the whole projection at once: `count(1)`, then per column
+    `count_if(c IS NULL)` and `count_if(c IS NOT NULL AND try_cast(c AS
+    type) IS NULL)`.  Every column name is a backquoted identifier
+    (backquotes doubled), so headers holding `.`, spaces or backquotes
+    are read as names.
+
     Returns {"status": "passed"|"failed", "rows": n, "columns":
     {name: {"type", "nullable", "null_count", "type_violations"}}}.
     """
-    from pyspark.sql import functions as F
-
     raw_schema = T.StructType(
         [T.StructField(f.name, T.StringType(), True) for f in schema.fields]
     )
@@ -194,38 +225,31 @@ def validate_against_schema(
         header=str(header).lower(), sep=delimiter, nullValue=""
     ).schema(raw_schema).csv(path)
 
-    aggs = [F.count(F.lit(1)).alias("__rows")]
+    exprs = ["count(1)"]
     for f in schema.fields:
-        c = F.col(f.name)
-        present = c.isNotNull()
-        aggs.append(
-            F.sum(F.when(~present, 1).otherwise(0))
-            .cast("long")
-            .alias(f"{f.name}__nulls")
-        )
+        c = _quote(f.name)
+        exprs.append(f"count_if({c} IS NULL)")
         if isinstance(f.dataType, T.StringType):
-            viol = F.lit(0)
+            exprs.append("0L")
         else:
-            viol = F.when(
-                present & c.try_cast(f.dataType).isNull(), 1
-            ).otherwise(0)
-        aggs.append(
-            F.sum(viol).cast("long").alias(f"{f.name}__viol")
-        )
-    row = raw.agg(*aggs).collect()[0]
+            exprs.append(
+                f"count_if({c} IS NOT NULL AND "
+                f"try_cast({c} AS {f.dataType.simpleString()}) IS NULL)"
+            )
+    row = raw.selectExpr(*exprs).collect()[0]
     cols = {
         f.name: {
             "type": f.dataType.simpleString(),
             "nullable": True,
-            "null_count": row[f"{f.name}__nulls"],
-            "type_violations": row[f"{f.name}__viol"],
+            "null_count": row[1 + 2 * i],
+            "type_violations": row[2 + 2 * i],
         }
-        for f in schema.fields
+        for i, f in enumerate(schema.fields)
     }
     failed = any(c["type_violations"] > 0 for c in cols.values())
     return {
         "status": "failed" if failed else "passed",
-        "rows": row["__rows"],
+        "rows": row[0],
         "columns": cols,
     }
 
@@ -252,6 +276,7 @@ def create_external_csv_table(
     delimiter: str = ",",
     header: bool = True,
     replace: bool = False,
+    properties: dict[str, str] | None = None,
 ) -> None:
     """External (unmanaged) CSV table: metadata-only registration, data
     stays in place, DROP keeps the files — the Spark form of the
@@ -264,15 +289,26 @@ def create_external_csv_table(
     while the data files stay in place.  Under the default, an existing
     table is a LOUD TableAlreadyExistsException — never an IF-NOT-EXISTS
     silence that would keep serving a stale schema after the underlying
-    file changed."""
-    cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields)
-    delim_sql = delimiter.replace("\\", "\\\\").replace("'", "\\'")
+    file changed.
+
+    `properties` become the table's TBLPROPERTIES (`ingest_csv` records
+    its ingest-time stats there)."""
+    cols = ", ".join(
+        f"{_quote(f.name)} {f.dataType.simpleString()}" for f in schema.fields
+    )
+    delim_sql = _sql_string(delimiter)
+    tblprops = ""
+    if properties:
+        tblprops = " TBLPROPERTIES (" + ", ".join(
+            f"'{_sql_string(k)}' = '{_sql_string(v)}'"
+            for k, v in properties.items()
+        ) + ")"
     if replace:
         spark.sql(f"DROP TABLE IF EXISTS `{table_name}`")
     spark.sql(
         f"CREATE TABLE `{table_name}` ({cols}) "
         f"USING CSV OPTIONS (header '{str(header).lower()}', sep '{delim_sql}') "
-        f"LOCATION '{location}'"
+        f"LOCATION '{location}'{tblprops}"
     )
 
 
@@ -313,7 +349,11 @@ def ingest_csv(
     step comments; backend/csv_processor.py:112-145) and attaches the
     result to `IngestResult.validation`.  `strict=True` additionally
     raises SchemaValidationError on failure — the reference's behavior,
-    where a pandera SchemaError aborts processing.
+    where a pandera SchemaError aborts processing.  Its row count is
+    registered with the table as ingest-time stats, keyed by the file
+    version taken before the scan, for `catalog.table_info` to serve
+    while that version holds; a path that is not a local file records
+    none.
 
     `replace=True` is the reference's `drop_if_exists` knob
     (backend/app.py:51, dropped before re-create at :80-84): re-ingesting
@@ -327,7 +367,11 @@ def ingest_csv(
         spark, path, delimiter=delimiter, header=header
     )
     validation = None
+    stats = None
     if validate:
+        # the file version the count below is true for, taken before
+        # the scan so a rewrite during it is not mistaken for this one
+        token = file_token(path)
         validation = validate_against_schema(
             spark, path, schema, delimiter=delim, header=header
         )
@@ -340,9 +384,14 @@ def ingest_csv(
             raise SchemaValidationError(
                 f"schema validation failed for {path}: type violations {bad}"
             )
+        if token is not None:
+            stats = {
+                ROWS_PROPERTY: str(validation["rows"]),
+                VERSION_PROPERTY: token,
+            }
     create_external_csv_table(
         spark, name, path, schema, delimiter=delim, header=header,
-        replace=replace,
+        replace=replace, properties=stats,
     )
     # MSCK REPAIR / REFRESH equivalent (reference backend/app.py:98)
     spark.sql(f"REFRESH TABLE `{name}`")

@@ -55,12 +55,13 @@ def _multiset_compare(a: DataFrame, b: DataFrame) -> tuple[int, int, int]:
     exceptAll uses, so the three numbers are identical to the old
     idiom's."""
     cols = a.columns
-    # r14 ADVICE: exceptAll compares POSITIONALLY; this helper compares
-    # by name (unionByName + b.select(*a.columns)).  The two agree only
-    # when both sides share the same columns in the same order, and the
-    # tag/delta columns must not collide with payload names — assert
-    # both so a future caller diverging from the contract fails loudly
-    # instead of comparing reordered columns.
+    # The column-order assert is the contract, not a by-name union's
+    # need: the union below matches by name, so a reordered `b` would
+    # still compare, but every caller is a batch/stream twin that must
+    # produce ONE schema, same names in the same order, as the
+    # positional exceptAll idiom this replaces required.  A twin whose
+    # column order drifts is a bug in the twin and fails here loudly.
+    # The tag/delta columns must not collide with payload names.
     assert cols == b.columns, (cols, b.columns)
     assert not {"__side", "__d", "__na"} & set(cols), cols
     row = (
@@ -1822,7 +1823,7 @@ def ddl_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sink = f"stream_dedup_{_uuid.uuid4().hex[:8]}"
     q = run_available_now(
-        stream_dedup(read_events_stream(spark, dup_dir)),
+        stream_dedup(read_events_stream(spark, dup_dir, schema=ev.schema)),
         sink,
         output_mode="append",
     )
@@ -1898,11 +1899,15 @@ def ddl_stream_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = _tmpdir("stream_resume_out_")
     ckpt = _tmpdir("stream_resume_ckpt_")
     ev.filter(F.col("event_id") % 2 == 0).write.mode("append").parquet(src)
-    q1 = stream_ingest_parquet(read_events_stream(spark, src), out, ckpt)
+    q1 = stream_ingest_parquet(
+        read_events_stream(spark, src, schema=ev.schema), out, ckpt
+    )
     _await_drained(q1, "ddl_stream_resume run 1")
     n_first = spark.read.parquet(out).count()
     ev.filter(F.col("event_id") % 2 == 1).write.mode("append").parquet(src)
-    q2 = stream_ingest_parquet(read_events_stream(spark, src), out, ckpt)
+    q2 = stream_ingest_parquet(
+        read_events_stream(spark, src, schema=ev.schema), out, ckpt
+    )
     _await_drained(q2, "ddl_stream_resume run 2")
     landed = spark.read.parquet(out)
     n_total = landed.count()
@@ -1952,7 +1957,7 @@ def ddl_stream_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _run():
         agg = (
-            read_events_stream(spark, src)
+            read_events_stream(spark, src, schema=ev.schema)
             .withWatermark("ts", "1 hour")
             .groupBy(F.window("ts", "1 day").alias("w"))
             .agg(F.count(F.lit(1)).alias("c"))

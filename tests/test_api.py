@@ -122,6 +122,67 @@ def test_drop_table_shape(spark, tmp_path):
     assert again["status"] == "success"
 
 
+# --- table_info row counts from ingest-time stats ----------------------------
+# A validated upload has counted its rows already; table_info serves that
+# count while the file version it was taken at still holds.
+
+def _write_rows(path, n):
+    with open(path, "w") as f:
+        f.write("id,v\n" + "".join(f"{i},{i * 1.5}\n" for i in range(n)))
+
+
+def test_table_info_counts_from_ingest_stats(spark, tmp_path, jobs_run_by):
+    p = str(tmp_path / "stats.csv")
+    _write_rows(p, 7)
+    api.process_csv(spark, p, "api_stats_t", validate=True)
+    try:
+        out = {}
+        jobs = jobs_run_by(
+            "info-from-stats",
+            lambda: out.update(api.table_info(spark, "api_stats_t")),
+        )
+        assert jobs == []
+        assert out["row_count"] == 7
+    finally:
+        spark.sql("DROP TABLE IF EXISTS api_stats_t")
+
+
+def test_table_info_recounts_rewritten_file(spark, tmp_path):
+    p = str(tmp_path / "rewritten.csv")
+    _write_rows(p, 7)
+    api.process_csv(spark, p, "api_rewritten_t", validate=True)
+    try:
+        _write_rows(p, 12)
+        assert api.table_info(spark, "api_rewritten_t")["row_count"] == 12
+    finally:
+        spark.sql("DROP TABLE IF EXISTS api_rewritten_t")
+
+
+def test_table_info_counts_without_validation(spark, tmp_path):
+    p = str(tmp_path / "unvalidated.csv")
+    _write_rows(p, 9)
+    api.process_csv(spark, p, "api_unvalidated_t", validate=False)
+    try:
+        assert api.table_info(spark, "api_unvalidated_t")["row_count"] == 9
+    finally:
+        spark.sql("DROP TABLE IF EXISTS api_unvalidated_t")
+
+
+def test_process_csv_header_with_dot_and_space(spark, tmp_path):
+    """`unit.price` is one column name, not struct access."""
+    p = str(tmp_path / "odd_header.csv")
+    with open(p, "w") as f:
+        f.write("id,unit.price,qty n\n1,2.5,3\n2,,x\n3,4.0,5\n")
+    out = api.process_csv(spark, p, "api_odd_header", validate=True)
+    try:
+        cols = out["validation"]["columns"]
+        assert cols["unit.price"]["null_count"] == 1
+        assert cols["unit.price"]["type_violations"] == 0
+        assert api.table_info(spark, "api_odd_header")["row_count"] == 3
+    finally:
+        spark.sql("DROP TABLE IF EXISTS api_odd_header")
+
+
 # --- database-qualified table names ("db.table") ----------------------------
 
 @pytest.fixture

@@ -10,9 +10,8 @@ comparison silently depends on.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from data_warehouse_hive_spark.registry import load_all
+from data_warehouse_hive_spark.session import conf_scope
 
 REGISTRY = load_all()
 
@@ -30,16 +29,6 @@ QUERIES = [
 ]
 
 
-@contextmanager
-def _shuffle_partitions(spark, n: int):
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-
-
 def _canon(df):
     cols = sorted(df.columns)
     rows = df.toPandas()[cols].itertuples(index=False, name=None)
@@ -49,8 +38,8 @@ def _canon(df):
 def test_results_identical_across_partition_counts(spark, sf_dir):
     for name in QUERIES:
         fn = REGISTRY[name].fn
-        with _shuffle_partitions(spark, 3):
+        with conf_scope(spark, {"spark.sql.shuffle.partitions": "3"}):
             a = _canon(fn(spark, sf_dir))
-        with _shuffle_partitions(spark, 29):
+        with conf_scope(spark, {"spark.sql.shuffle.partitions": "29"}):
             b = _canon(fn(spark, sf_dir))
         assert a == b, f"{name}: result depends on shuffle partitioning"

@@ -43,6 +43,7 @@ region.write.mode("overwrite").saveAsTable("hive_rt_managed")
 with open({csv!r}, "w") as f:
     f.write("id,name\\n1,a\\n2,b\\n3,c\\n")
 res = ingest_csv(spark, {csv!r}, "hive_rt_external")
+ingest_csv(spark, {csv!r}, "hive_rt_stats", validate=True)
 
 print("WRITER:" + json.dumps({{"n_region": region.count(),
                                "ext_table": res.table_name}}))
@@ -69,11 +70,17 @@ out = {{
 }}
 m = cat.table_info(spark, "hive_rt_managed")
 e = cat.table_info(spark, "hive_rt_external")
+sc = spark.sparkContext
+sc.setJobGroup("stats", "stats")
+s = cat.table_info(spark, "hive_rt_stats")
+sc.setLocalProperty("spark.jobGroup.id", None)
 out.update(
     managed_rows=m.row_count, managed_is_external=m.is_external,
     external_rows=e.row_count, external_is_external=e.is_external,
     external_has_location=e.location is not None,
     managed_cols=[c["col_name"] for c in m.columns],
+    stats_rows=s.row_count,
+    stats_jobs=len(sc.statusTracker().getJobIdsForGroup("stats")),
 )
 print("READER:" + json.dumps(out))
 spark.stop()
@@ -111,5 +118,7 @@ def test_hive_metastore_roundtrip(tmp_path):
     # external: metadata-only registration over the CSV left in place
     assert r["external_rows"] == 3 and r["external_is_external"]
     assert r["external_has_location"]
+    # ingest-time stats persist with the table: its count scans nothing
+    assert r["stats_rows"] == 3 and r["stats_jobs"] == 0
     # external semantics: data file untouched by everything above
     assert os.path.exists(csv)

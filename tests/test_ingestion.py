@@ -631,6 +631,72 @@ def test_sample_inference_matches_file_inference(spark, tmp_path, delim, header)
         ]
 
 
+@pytest.mark.parametrize("header", [True, False])
+@pytest.mark.parametrize("delim", [",", ";", "\t", "|"])
+def test_validation_rows_match_table_count(spark, tmp_path, delim, header):
+    """The count validation takes is the one table_info serves from
+    stats, so it must equal what the registered table counts."""
+    path = _write(tmp_path, "parity.csv", [delim.join(r) for r in _PARITY_ROWS])
+    name = f"vrows_{ord(delim)}_{int(header)}"
+    res = ingest_csv(spark, path, name, header=header, validate=True)
+    try:
+        assert res.delimiter == delim
+        n = spark.table(name).count()
+        assert res.validation["rows"] == n == len(_PARITY_ROWS) - header
+        assert cat.table_info(spark, name).row_count == n
+    finally:
+        cat.drop_table(spark, name)
+
+
+def test_validation_rows_skip_blank_lines(spark, tmp_path, jobs_run_by):
+    """Blank lines are no rows for validation or for the table; the two
+    ids planted past the inference sample are type violations."""
+    lines = ["id,amount"]
+    for i in range(1100):
+        lines.append(f"x{i},{i}" if i in (1005, 1050) else f"{i},{i * 2}")
+        if i % 97 == 0:
+            lines.append("")
+    path = _write(tmp_path, "blank_lines.csv", lines + [""])
+    res = ingest_csv(spark, path, "vrows_blank", validate=True)
+    try:
+        assert res.validation["rows"] == spark.table("vrows_blank").count() == 1100
+        assert res.validation["columns"]["id"]["type_violations"] == 2
+        info = []
+        assert jobs_run_by(
+            "vrows-blank-info",
+            lambda: info.append(cat.table_info(spark, "vrows_blank")),
+        ) == []
+        assert info[0].row_count == 1100
+    finally:
+        cat.drop_table(spark, "vrows_blank")
+
+
+def test_validate_header_only_file(spark, tmp_path):
+    """No data rows: every count is 0, not NULL."""
+    path = _write(tmp_path, "header_only.csv", ["a,b"])
+    res = ingest_csv(spark, path, "vrows_empty", validate=True)
+    try:
+        assert res.validation["rows"] == 0
+        assert res.validation["status"] == "passed"
+        assert all(
+            c["null_count"] == 0 and c["type_violations"] == 0
+            for c in res.validation["columns"].values()
+        )
+        assert cat.table_info(spark, "vrows_empty").row_count == 0
+    finally:
+        cat.drop_table(spark, "vrows_empty")
+
+
+def test_backquote_in_header_is_one_identifier(spark, tmp_path):
+    path = _write(tmp_path, "backquote.csv", ["a`b,c", "1,2", ",x"])
+    res = ingest_csv(spark, path, "vrows_backquote", validate=True)
+    try:
+        assert res.validation["columns"]["a`b"]["null_count"] == 1
+        assert spark.table("vrows_backquote").columns == ["a`b", "c"]
+    finally:
+        cat.drop_table(spark, "vrows_backquote")
+
+
 @pytest.fixture
 def meta_tables(spark):
     """A partitioned table with a column COMMENT in `meta_db`, one in the

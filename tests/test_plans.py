@@ -22,6 +22,7 @@ from data_warehouse_hive_spark.plans.explain import (
     uses_take_ordered,
 )
 from data_warehouse_hive_spark.registry import load_all
+from data_warehouse_hive_spark.session import conf_scope
 
 REGISTRY = load_all()
 
@@ -193,13 +194,7 @@ def test_cbo_join_reorder_uses_analyze_stats(spark, sf_dir):
     tbl(spark, sf_dir, "part").filter("p_size = 1").select(
         "p_partkey", "p_brand"
     ).write.mode("overwrite").saveAsTable(names[2])
-    old = {
-        k: spark.conf.get(k, "false")
-        for k in (
-            "spark.sql.cbo.enabled",
-            "spark.sql.cbo.joinReorder.enabled",
-        )
-    }
+    cbo = ("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled")
     try:
         for tb, cols in (
             (names[0], "l_orderkey,l_partkey"),
@@ -222,21 +217,17 @@ def test_cbo_join_reorder_uses_analyze_stats(spark, sf_dir):
             assert all(p >= 0 for p in pos.values()), opt
             return sorted(pos, key=pos.get)
 
-        for k in old:
-            spark.conf.set(k, "false")
-        assert dim_order() == [names[1], names[2]], "syntactic order kept"
-        for k in old:
-            spark.conf.set(k, "true")
-        # deeper in the tree = earlier join = LATER in the plan string's
-        # indentation, but find() order tracks the top-down print: the
-        # reordered tree prints (fact ⋈ dimb) before the dima join input,
-        # i.e. dimb now appears first.
-        assert dim_order() == [names[2], names[1]], (
-            "CBO did not reorder the star despite ANALYZE stats"
-        )
+        with conf_scope(spark, dict.fromkeys(cbo, "false")):
+            assert dim_order() == [names[1], names[2]], "syntactic order kept"
+        with conf_scope(spark, dict.fromkeys(cbo, "true")):
+            # deeper in the tree = earlier join = LATER in the plan
+            # string's indentation, but find() order tracks the top-down
+            # print: the reordered tree prints (fact ⋈ dimb) before the
+            # dima join input, i.e. dimb now appears first.
+            assert dim_order() == [names[2], names[1]], (
+                "CBO did not reorder the star despite ANALYZE stats"
+            )
     finally:
-        for k, v in old.items():
-            spark.conf.set(k, v)
         for n in names:
             spark.sql(f"DROP TABLE IF EXISTS {n}")
 
@@ -296,22 +287,12 @@ def test_aqe_splits_skewed_join(spark):
     import contextlib
     import io
 
-    old = {
-        k: spark.conf.get(k, None)
-        for k in (
-            "spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        )
-    }
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-        spark.conf.set(
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "256KB"
-        )
-        spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "256KB")
+    with conf_scope(spark, {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "256KB",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "256KB",
+    }):
         left = (
             spark.range(500_000)
             .select(F.lit(7).cast("long").alias("k"), F.col("id").alias("v"))
@@ -333,10 +314,6 @@ def test_aqe_splits_skewed_join(spark):
         plan = buf.getvalue()
         assert "isFinalPlan=true" in plan
         assert "skew=true" in plan, plan
-    finally:
-        for k, v in old.items():
-            if v is not None:
-                spark.conf.set(k, v)
 
 
 def test_curation_filters_are_narrow_maps(spark, sf_dir):
@@ -454,10 +431,7 @@ def test_runtime_bloom_filter_semi_join_reduction(spark, tmp_path):
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
-    prev = {k: spark.conf.get(k, None) for k in overrides}
-    for k, v in overrides.items():
-        spark.conf.set(k, v)
-    try:
+    with conf_scope(spark, overrides):
         fact = spark.read.parquet(big_p)
         dim = spark.read.parquet(dim_p).filter(F.col("k") < 10)
         joined = fact.join(dim, "k")
@@ -469,12 +443,6 @@ def test_runtime_bloom_filter_semi_join_reduction(spark, tmp_path):
         assert "bloom_filter_agg" in plan, plan
         # semantics unchanged by the filter
         assert joined.count() == 200_000 // 1000 * 10
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_pointrange_lookup_is_broadcast_equi_join(spark, sf_dir):
@@ -1359,10 +1327,6 @@ def test_aqe_splits_skewed_join_partition(spark):
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
     }
-    old = {k: spark.conf.get(k, None) for k in lowered}
-    old["spark.sql.adaptive.skewJoin.enabled"] = spark.conf.get(
-        "spark.sql.adaptive.skewJoin.enabled", "true"
-    )
 
     def skewed_join():
         left = spark.range(200000).select(
@@ -1381,21 +1345,13 @@ def test_aqe_splits_skewed_join_partition(spark):
         # finalizes per-execution; count() would plan a different one)
         return df._jdf.queryExecution().executedPlan().toString()
 
-    try:
-        for k, v in lowered.items():
-            spark.conf.set(k, v)
-        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
+    skew = "spark.sql.adaptive.skewJoin.enabled"
+    with conf_scope(spark, {**lowered, skew: "true"}):
         plan = executed_plan(skewed_join())
         assert "isFinalPlan=true" in plan, plan
         assert "skew=true" in plan, plan
         assert re.search(r"AQEShuffleRead.*skewed", plan), plan
 
-        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-        plan_off = executed_plan(skewed_join())
+        with conf_scope(spark, {skew: "false"}):
+            plan_off = executed_plan(skewed_join())
         assert "skew=true" not in plan_off, plan_off
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)

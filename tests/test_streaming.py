@@ -667,3 +667,17 @@ def test_stream_drain_timeout_env_parsing(monkeypatch):
             warnings.simplefilter("always")
             assert stream_drain_timeout_s() == 120
         assert any("SPARK_GRAFT_STREAM_DRAIN_S" in str(x.message) for x in w)
+
+
+def test_stream_ddl_leaves_no_memo_entry_per_run(spark, sf_dir, registry):
+    """A streaming ddl that reads the directory it just wrote passes the
+    written frame's schema, so no run infers (and memoizes) the schema
+    of a fresh temp directory."""
+    from data_warehouse_hive_spark import tables
+
+    fn = registry["ddl_stream_dedup"].fn
+    fn(spark, sf_dir).collect()
+    after_first = (tables.memo_misses, len(tables._MEMO))
+    for _ in range(2):
+        fn(spark, sf_dir).collect()
+    assert (tables.memo_misses, len(tables._MEMO)) == after_first
